@@ -1,0 +1,4 @@
+"""Repository benchmark: seeded workloads, end-to-end and per-layer metrics.
+
+Entry point: ``python3 perfbench/run.py --help``; see README.md here.
+"""
