@@ -17,15 +17,8 @@ import time
 from dataclasses import dataclass, field
 
 HEAP = "2g"  # driver heap: well below the host's RAM, ample for these inputs
-PASS_SECONDS = 20.0  # nominal length of one timed pass
-SETUP_REPS = 3
-RUN_DEADLINE_S = 150.0  # stop starting passes beyond this; exit is at 180 s
-
-
-def passes_for(seconds: float) -> int:
-    """Timed passes for a ``--seconds`` budget: one per PASS_SECONDS, at
-    least one. The count never depends on how fast the passes run."""
-    return max(1, round(seconds / PASS_SECONDS))
+YOUNG_GEN = "256m"
+SETUP_REPS = 7  # setup_s is the median of this many input builds
 
 
 def median(xs) -> float:
@@ -77,6 +70,7 @@ class Session:
     cores: int
     start_s: float
     event_dir: str | None
+    own_rdds: set = field(default_factory=set)  # persisted by the benchmark
 
     @staticmethod
     def start(sandbox: Sandbox, cores: int, traced: bool) -> "Session":
@@ -85,7 +79,12 @@ class Session:
         tmp = os.path.join(sandbox.work, "tmp")
         conf = {
             "spark.driver.memory": HEAP,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+            # a fixed heap and young generation: the JVM would otherwise
+            # resize both from GC pause times, and with them the resident
+            # set, differently from run to run
+            "spark.driver.extraJavaOptions": (
+                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{HEAP} -Xmn{YOUNG_GEN}"
+            ),
             "spark.local.dir": os.path.join(sandbox.work, "local"),
             "spark.sql.warehouse.dir": os.path.join(sandbox.work, "warehouse"),
         }
@@ -125,19 +124,31 @@ class Session:
         py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
         return (jvm_kb + py_kb) / 1024.0
 
+    def materialise(self, df):
+        """``df`` computed now and held in a locally checkpointed frame,
+        which the engine's CacheManager never matches against a plan.
+        The frame's RDD is recorded as the benchmark's own."""
+        out = df.localCheckpoint(eager=True)
+        self.own_rdds.add(out._jdf.queryExecution().analyzed().rdd().id())  # noqa: SLF001
+        return out
+
     def persisted_rdds(self) -> set[int]:
         return {int(k) for k in self.sc._jsc.getPersistentRDDs().keySet().toArray()}  # noqa: SLF001
 
-    def release_since(self, baseline: set[int]) -> int:
+    def left_by_program(self, baseline: set[int]) -> int:
+        """RDDs persisted since ``baseline`` that the benchmark did not
+        materialise itself: caches the engine's calls left behind."""
+        return len(self.persisted_rdds() - baseline - self.own_rdds)
+
+    def release_since(self, baseline: set[int]) -> None:
         """Drop every cache made after ``baseline`` was taken: the
         engine's cached plans (CacheManager) and any persisted or locally
-        checkpointed RDD. Returns how many RDDs were left persisted."""
+        checkpointed RDD."""
         self.spark.catalog.clearCache()
         rdds = self.sc._jsc.getPersistentRDDs()  # noqa: SLF001
-        extra = [k for k in rdds.keySet().toArray() if int(k) not in baseline]
-        for key in extra:
-            rdds.get(key).unpersist(True)
-        return len(extra)
+        for key in rdds.keySet().toArray():
+            if int(key) not in baseline:
+                rdds.get(key).unpersist(True)
 
     def stop(self) -> None:
         self.spark.stop()

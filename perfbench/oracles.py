@@ -131,6 +131,24 @@ def label_propagation(
     return label, max_iterations
 
 
+def neighbourhood_mean(
+    ids: np.ndarray, vecs: np.ndarray, src: np.ndarray, dst: np.ndarray
+) -> np.ndarray:
+    """Node vectors for the sorted ``ids``: each node's own vector
+    averaged with the vectors of the nodes it links to (one term per edge
+    row; links to nodes outside ``ids`` add nothing), then scaled to unit
+    length where the norm is positive."""
+    inside = np.isin(dst, ids)
+    s, d = _index(ids, src[inside], dst[inside])
+    total = vecs.astype(np.float64, copy=True)
+    count = np.ones(len(ids))
+    np.add.at(total, s, vecs[d])
+    np.add.at(count, s, 1.0)
+    mean = total / count[:, None]
+    norm = np.linalg.norm(mean, axis=1, keepdims=True)
+    return np.where(norm > 0, mean / np.where(norm > 0, norm, 1.0), mean)
+
+
 def exact_topk(corpus: np.ndarray, queries: np.ndarray, k: int) -> np.ndarray:
     """Row positions of the ``k`` highest-cosine corpus rows per query."""
     c = corpus / np.maximum(np.linalg.norm(corpus, axis=1, keepdims=True), 1e-300)

@@ -10,11 +10,15 @@ taken from a traced session whose job groups and Spark event log
 attribute engine work to each layer. The lines before it give the run's
 input fingerprint and the workload's own stage metrics. Everything is
 also written to ``.bench_out/``. See ``perfbench/README.md``.
+
+Each run times one pass of a fixed amount of work; ``--seconds`` is
+accepted and recorded, and does not change what is measured.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -31,13 +35,16 @@ from perfbench.harness import SETUP_REPS, Sandbox, Session, Tally, median  # noq
 from perfbench.trace import COUNTERS, Span, Tracer, attribute, event_log_path  # noqa: E402
 
 
+WARMUP_SEED_OFFSET = 1_000_003  # the warm-up runs on another seed's inputs
+
+
 @dataclass
 class Pass:
     span: Span
     spans: dict  # name -> Span, every span inside the pass
     out: dict
     facts: dict
-    leftover_rdds: int
+    leftover_rdds: int = 0
 
 
 @dataclass
@@ -47,7 +54,7 @@ class Phase:
     tracer: Tracer
     session: Session
     setups: list
-    passes: list
+    timed: Pass
     workload: object
     fingerprint: dict
     peak_rss_mb: float
@@ -55,12 +62,16 @@ class Phase:
     extras: Pass | None = None  # traced runs: layers measured outside the pass
     marks: dict = field(default_factory=dict)  # seconds since start, by phase
 
-    @property
-    def job_s(self) -> float:
-        return median(p.span.seconds for p in self.passes)
 
+def measure(args, sandbox, tally, traced, started) -> Phase:
+    """Warm up on another seed's inputs, build the inputs SETUP_REPS
+    times, then time one pass and check its outputs.
 
-def measure(args, sandbox, tally, traced, setup_reps, seconds, started) -> Phase:
+    Clean reps hold by construction: the warm-up's inputs differ from the
+    measured ones, so no cache it leaves (in the engine or in Python) can
+    answer a timed call, and just before the pass the engine's cached
+    plans are cleared and every RDD persisted since the end of setup is
+    unpersisted."""
     from perfbench.workloads import WORKLOADS
 
     cores = os.cpu_count() or 1
@@ -72,41 +83,42 @@ def measure(args, sandbox, tally, traced, setup_reps, seconds, started) -> Phase
     session = Session.start(sandbox, cores, traced)
     mark("session")
     tracer = Tracer(session.sc, f"{args.workload}-{args.seed}-{os.getpid()}-{int(traced)}", traced)
-    workload = WORKLOADS[args.workload](session, sandbox, args.seed, tally)
-
+    kind = WORKLOADS[args.workload]
     empty = session.persisted_rdds()
+
+    warm = kind(session, sandbox, args.seed + WARMUP_SEED_OFFSET, Tally())
+    with tracer.span("warmup"):
+        warm.setup(tracer, 0)
+        warm.prepare()
+        warm.run_pass(tracer)
+    warm.remove()
+    mark("warmup")
+
+    workload = kind(session, sandbox, args.seed, tally)
     setups = []
-    for rep in range(setup_reps):
+    for rep in range(SETUP_REPS):
         session.release_since(empty)
         with tracer.span("setup") as sp:
             workload.setup(tracer, rep)
         setups.append(sp)
     baseline = session.persisted_rdds()
     mark("setup")
+
     workload.prepare()
+    session.release_since(baseline)
     mark("prepare")
 
-    # a fixed pass count: a faster program is never measured over more passes
-    passes: list[Pass] = []
+    with tracer.span("pass") as sp:
+        out = workload.run_pass(tracer)
+    mark("pass")
+    leftover = session.left_by_program(baseline)
+    timed = Pass(sp, tracer.descendants(sp), out, workload.check(out), leftover)
+    mark("check")
     extras = None
-    n_passes = harness.passes_for(seconds)
-    for index in range(n_passes):
-        if passes and time.perf_counter() - started > harness.RUN_DEADLINE_S:
-            break
-        with tracer.span("pass") as sp:
-            out = workload.run_pass(tracer, index)
-        mark(f"pass{index}")
-        facts = workload.check(out)
-        mark(f"check{index}")
-        passes.append(Pass(sp, tracer.descendants(sp), out, facts, 0))
-        if traced and index == n_passes - 1:
-            with tracer.span("extras") as ex:
-                extra = workload.run_extras(tracer, out)
-            extras = Pass(ex, tracer.descendants(ex), extra, workload.check_extras(extra), 0)
-        workload.cleanup_pass(out)
-        passes[-1].leftover_rdds = session.release_since(baseline)
-        tally.check("clean_reps", session.persisted_rdds() == baseline,
-                    detail="persisted RDDs differ from the end of setup")
+    if traced:
+        with tracer.span("extras") as ex:
+            extra = workload.run_extras(tracer, out)
+        extras = Pass(ex, tracer.descendants(ex), extra, workload.check_extras(extra))
 
     fingerprint = workload.fingerprint()
     mark("fingerprint")
@@ -114,7 +126,7 @@ def measure(args, sandbox, tally, traced, setup_reps, seconds, started) -> Phase
     app_id = session.sc.applicationId
     session.stop()
     mark("stop")
-    phase = Phase(tracer, session, setups, passes, workload, fingerprint, peak,
+    phase = Phase(tracer, session, setups, timed, workload, fingerprint, peak,
                   extras=extras, marks=marks)
     if traced:
         phase.engine = attribute(tracer, event_log_path(session.event_dir, app_id))
@@ -124,13 +136,14 @@ def measure(args, sandbox, tally, traced, setup_reps, seconds, started) -> Phase
 def end_to_end(phase: Phase) -> dict:
     return {
         "setup_s": median(s.seconds for s in phase.setups),
-        "job_s": phase.job_s,
+        "job_s": phase.timed.span.seconds,
         "peak_rss_mb": phase.peak_rss_mb,
     }
 
 
 def pass_layer_values(phase: Phase, p: Pass) -> dict:
-    """Every per-layer figure one traced pass yields, by metric name."""
+    """Every per-layer figure a traced pass (or the extras) yields, by
+    metric name."""
     vals: dict[str, float] = {}
     cores = phase.session.cores
     for name, sp in p.spans.items():
@@ -159,10 +172,6 @@ def pass_layer_values(phase: Phase, p: Pass) -> dict:
     ):
         if source in vals:
             vals[name] = vals[source]
-    if vals.get("storage.snapshots.live_mb"):
-        vals["storage.snapshots.write_amp"] = (
-            vals["storage.snapshots.bytes_written_mb"] / vals["storage.snapshots.live_mb"]
-        )
     eng = phase.engine.get(p.span.id, {})
     for c in ("jobs", "stages", "tasks", "failed_tasks", "gc_s"):
         vals[f"spark.{c}"] = eng.get(c, 0.0)
@@ -171,36 +180,50 @@ def pass_layer_values(phase: Phase, p: Pass) -> dict:
     return vals
 
 
-def _untraced_job_s(sandbox, args, phase: Phase) -> float | None:
-    """``job_s`` of an untraced run of the same workload, seed, pass count
-    and inputs, from its result file in this checkout; None if there is
-    none. Each run starts its own JVM, so the two passes are measured
-    alike; a second session in this process would run on a warm JVM."""
+def code_hash() -> str:
+    """Content hash of the engine and the benchmark sources, so a result
+    is only ever compared with one of the same code."""
+    h = hashlib.sha256()
+    for top in ("plwordnet_spark", "perfbench"):
+        for dirpath, dirs, files in os.walk(os.path.join(ROOT, top)):
+            dirs.sort()
+            for name in sorted(files):
+                if name.endswith(".py"):
+                    path = os.path.join(dirpath, name)
+                    h.update(os.path.relpath(path, ROOT).encode())
+                    with open(path, "rb") as fh:
+                        h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
+def _untraced_job_s(sandbox, args, phase: Phase, code: str) -> float | None:
+    """``job_s`` of an untraced run of the same workload, seed, code and
+    inputs, from its result file in this checkout; None if there is none.
+    Each run starts its own JVM, so the two passes are measured alike; a
+    second session in this process would run on a warm JVM."""
     path = os.path.join(sandbox.out, _stem(args, trace=0) + ".json")
     try:
         with open(path, encoding="utf-8") as fh:
             record = json.load(fh)
     except (OSError, ValueError):
         return None
-    if record.get("inputs") != phase.fingerprint or record.get("passes") != len(phase.passes):
+    if record.get("inputs") != phase.fingerprint or record.get("code") != code:
         return None
     return record["result"]["metrics"]["job_s"]["value"]
 
 
 def per_layer(phase: Phase, untraced_job_s: float | None, names: list[str]) -> dict:
-    """Medians over the traced passes, then the extras for the layers no
-    pass calls. The tracing overhead reads 0 when no untraced run of the
-    same inputs has left its result here."""
-    per_pass = [pass_layer_values(phase, p) for p in phase.passes]
+    """The traced pass's figures, then the extras' for the layers the
+    pass does not call. The tracing overhead reads 0 when no untraced run
+    of the same code and inputs has left its result here."""
+    main_vals = pass_layer_values(phase, phase.timed)
     extra = pass_layer_values(phase, phase.extras) if phase.extras else {}
-    vals = {
-        n: median(v[n] for v in per_pass) if n in per_pass[0] else extra.get(n, 0.0)
-        for n in names
-    }
+    vals = {n: main_vals[n] if n in main_vals else extra.get(n, 0.0) for n in names}
     corpus = [s for sp in phase.setups for s in phase.tracer.descendants(sp).values()
               if s.name == "corpus"]
     pages = float(phase.fingerprint.get("pages", 0))
     ext = phase.extras.spans.get("extraction") if phase.extras else None
+    job_s = phase.timed.span.seconds
     run_level = {
         "session.start_s": phase.session.start_s,
         "corpus.generate_s": median(s.seconds for s in corpus),
@@ -208,9 +231,9 @@ def per_layer(phase: Phase, untraced_job_s: float | None, names: list[str]) -> d
         "extraction.s": ext.seconds if ext else 0.0,
         "extraction.pages_per_s": pages / ext.seconds if ext else 0.0,
         "extraction.busy_s": phase.engine.get(ext.id, {}).get("run_s", 0.0) if ext else 0.0,
-        "trace.job_s": phase.job_s,
+        "trace.job_s": job_s,
         "trace.untraced_job_s": untraced_job_s or 0.0,
-        "trace.overhead_s": phase.job_s - untraced_job_s if untraced_job_s else 0.0,
+        "trace.overhead_s": job_s - untraced_job_s if untraced_job_s else 0.0,
     }
     vals.update({k: v for k, v in run_level.items() if k in vals})
     return vals
@@ -233,19 +256,20 @@ def main(argv=None) -> int:
 
     sandbox = Sandbox(ROOT)
     tally = Tally()
+    code = code_hash()
     record = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
-              "seconds": args.seconds, "cores": os.cpu_count(), "heap": harness.HEAP}
+              "seconds": args.seconds, "cores": os.cpu_count(), "heap": harness.HEAP,
+              "code": code}
     try:
+        phase = measure(args, sandbox, tally, bool(args.trace), started)
         if args.trace:
-            phase = measure(args, sandbox, tally, True, SETUP_REPS, args.seconds, started)
-            metrics = per_layer(phase, _untraced_job_s(sandbox, args, phase), list(wanted))
+            metrics = per_layer(phase, _untraced_job_s(sandbox, args, phase, code), list(wanted))
             phase.tracer.dump(os.path.join(sandbox.out, _stem(args) + "-spans.json"))
         else:
-            phase = measure(args, sandbox, tally, False, SETUP_REPS, args.seconds, started)
             metrics = end_to_end(phase)
             record["stage_metrics"] = {
                 k: {"value": v, "unit": phase.workload.stage_units[k]}
-                for k, v in phase.workload.stage_metrics(phase.passes).items()
+                for k, v in phase.workload.stage_metrics(phase.timed.spans, phase.timed.out).items()
             }
     finally:
         Session.shutdown_jvm()
@@ -256,13 +280,11 @@ def main(argv=None) -> int:
         raise RuntimeError(f"metrics not measured: {sorted(missing)}")
     record.update(
         inputs=phase.fingerprint,
-        passes=len(phase.passes),
-        pass_s=[p.span.seconds for p in phase.passes],
-        pass_spans=[{n: sp.seconds for n, sp in p.spans.items()} for p in phase.passes],
+        setup_s=[sp.seconds for sp in phase.setups],
+        pass_spans={n: sp.seconds for n, sp in phase.timed.spans.items()},
         timeline=phase.marks,
-        pass_facts=[{f"{layer}.{k}": v for layer, facts in p.facts.items()
-                     for k, v in facts.items() if isinstance(v, (int, float))}
-                    for p in phase.passes],
+        pass_facts={f"{layer}.{k}": v for layer, facts in phase.timed.facts.items()
+                    for k, v in facts.items() if isinstance(v, (int, float))},
         session_start_s=phase.session.start_s,
         check_failures=tally.notes,
         wall_s=time.perf_counter() - started,
@@ -276,8 +298,8 @@ def main(argv=None) -> int:
     record["result"] = result
     with open(os.path.join(sandbox.out, _stem(args) + ".json"), "w", encoding="utf-8") as fh:
         json.dump(record, fh, indent=1)
-    print(json.dumps({k: record[k] for k in ("workload", "seed", "cores", "heap", "inputs",
-                                             "passes", "check_failures")}))
+    print(json.dumps({k: record[k] for k in ("workload", "seed", "cores", "heap", "code",
+                                             "inputs", "check_failures")}))
     if "stage_metrics" in record:
         print(json.dumps({"stage_metrics": record["stage_metrics"]}))
     print(json.dumps(result))

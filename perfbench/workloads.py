@@ -3,12 +3,15 @@
 Each workload builds its inputs from the seed in ``setup`` (timed, and
 repeated for ``setup_s``), draws what the timed part needs from them in
 ``prepare`` (untimed), runs its timed part in ``run_pass`` with one span
-per call into an engine layer, and checks a pass's outputs in ``check``
-against the benchmark's own oracles, outside every timed section.
+per call into an engine layer, and checks the pass's outputs in
+``check`` against the benchmark's own oracles, outside every timed
+section. Everything a workload writes lives under its own directory,
+named after its seed, so the warm-up instance of another seed shares no
+files with the measured one.
 
 Every timed call ends by materialising what it returns
-(``localCheckpoint``, a write or a collect), so its work falls inside
-the span that names it.
+(``Session.materialise``, a write or a collect), so its work falls
+inside the span that names it.
 """
 
 from __future__ import annotations
@@ -24,10 +27,6 @@ from pyspark.sql import functions as F
 
 from perfbench import oracles
 from perfbench.harness import median, percentile
-
-
-def _materialise(df):
-    return df.localCheckpoint(eager=True)
 
 
 def _arrays(df, *cols):
@@ -46,10 +45,17 @@ class Workload:
     def __init__(self, session, sandbox, seed: int, tally):
         self.session = session
         self.spark = session.spark
-        self.sandbox = sandbox
+        self.materialise = session.materialise
+        self.dir = sandbox.path(f"seed{seed}")
         self.seed = seed
         self.tally = tally
         self.pages_df = None  # pages the extraction layer is timed on
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.dir, name)
+
+    def remove(self) -> None:
+        shutil.rmtree(self.dir, ignore_errors=True)
 
     def setup(self, tracer, rep: int) -> None:
         raise NotImplementedError
@@ -57,18 +63,15 @@ class Workload:
     def prepare(self) -> None:
         """Untimed: draw query keys and sources from the inputs."""
 
-    def run_pass(self, tracer, index: int) -> dict:
+    def run_pass(self, tracer) -> dict:
         raise NotImplementedError
 
     def check(self, out: dict) -> dict:
         """Untimed: verify ``out``; return per-layer facts for the trace."""
         raise NotImplementedError
 
-    def cleanup_pass(self, out: dict) -> None:
-        """Untimed: remove whatever files the pass wrote."""
-
     def run_extras(self, tracer, out: dict) -> dict:
-        """Traced runs only, after the last pass and outside ``job_s``:
+        """Traced runs only, after the pass and outside ``job_s``:
         the layers that the run-time budget keeps out of the timed pass,
         each in its own span, on that pass's outputs."""
         with tracer.span("extraction"):
@@ -81,8 +84,9 @@ class Workload:
     def fingerprint(self) -> dict:
         raise NotImplementedError
 
-    def stage_metrics(self, passes: list) -> dict:
-        """The workload's own user-facing figures over the timed passes."""
+    def stage_metrics(self, spans: dict, out: dict) -> dict:
+        """The workload's own user-facing figures, from the pass's spans
+        and its outputs."""
         raise NotImplementedError
 
 
@@ -117,11 +121,6 @@ def _pages_fingerprint(pages) -> dict:
     return {"pages": int(row["n"]), "pages_hash": str(row["h"])}
 
 
-def _named(passes, name):
-    """Seconds of the span called ``name`` inside each pass."""
-    return [p.spans[name].seconds for p in passes if name in p.spans]
-
-
 # --------------------------------------------------------------------------
 class CrawlPipeline(Workload):
     """Pages to link graph to PageRank, components and triangles on a small
@@ -141,15 +140,14 @@ class CrawlPipeline(Workload):
         from plwordnet_spark.corpus import generate_pages
 
         with tracer.span("corpus"):
-            self.pages = _materialise(generate_pages(self.spark, self.N_PAGES, self.seed))
+            self.pages = self.materialise(generate_pages(self.spark, self.N_PAGES, self.seed))
         self.pages_df = self.pages
 
     def prepare(self):
         (page_ids,) = _arrays(self.pages.select(F.xxhash64("url").alias("id")), "id")
         self.source = int(np.random.default_rng(self.seed + 1).choice(np.sort(page_ids)))
-        self.digest = None
 
-    def run_pass(self, tracer, index):
+    def run_pass(self, tracer):
         from plwordnet_spark.graph.build import build_graph
         from plwordnet_spark.graph.components import connected_components
         from plwordnet_spark.graph.pagerank import pagerank
@@ -158,19 +156,19 @@ class CrawlPipeline(Workload):
         spark, out = self.spark, {}
         with tracer.span("graph.build"):
             tables = build_graph(self.pages)
-            edges = out["edges"] = _materialise(tables.edges)
-            nodes = out["nodes"] = _materialise(tables.nodes)
+            edges = out["edges"] = self.materialise(tables.edges)
+            nodes = out["nodes"] = self.materialise(tables.nodes)
         self.tally.ops()
         with tracer.span("graph.pagerank"):
             out["pr"] = pagerank(
                 spark, edges, nodes=nodes, tol=self.PR_TOL,
                 max_iterations=self.PR_MAX_ITERS,
             )
-            out["ranks"] = _materialise(out["pr"].state)
+            out["ranks"] = self.materialise(out["pr"].state)
         self.tally.ops()
         with tracer.span("graph.components"):
             out["cc"] = connected_components(spark, edges, nodes=nodes)
-            out["components"] = _materialise(out["cc"].state)
+            out["components"] = self.materialise(out["cc"].state)
         self.tally.ops()
         with tracer.span("graph.triangles"):
             out["triangles"] = triangle_count(edges)
@@ -186,14 +184,14 @@ class CrawlPipeline(Workload):
             extra["lp"] = label_propagation(
                 spark, edges, nodes=nodes, max_iterations=self.LP_MAX_ITERS
             )
-            extra["labels"] = _materialise(extra["lp"].state)
+            extra["labels"] = self.materialise(extra["lp"].state)
         self.tally.ops()
         with tracer.span("graph.bfs"):
             extra["bfs"] = bfs_distances(
                 spark, edges, sources=[self.source], nodes=nodes, directed=False,
                 max_iterations=self.BFS_MAX_HOPS,
             )
-            extra["dist"] = _materialise(extra["bfs"].state)
+            extra["dist"] = self.materialise(extra["bfs"].state)
         self.tally.ops()
         super().run_extras(tracer, out)
         return extra
@@ -222,42 +220,31 @@ class CrawlPipeline(Workload):
                           "reached": reached, "useful_frac": reached / frontier},
         }
 
-    def _oracles(self, src, dst, w, ids):
-        """The graph is the same in every pass; its oracle answers are
-        computed on the first (the extras' oracles in ``check_extras``)."""
-        self.src, self.dst, self.w, self.ids = src, dst, w, ids
-        self.digest = _digest(src, dst, w, ids)
-        self.want_comp = oracles.components(src, dst, ids)
-        self.want_triangles = oracles.triangle_count(src, dst)
-        self.want_ranks = {}  # by iteration count
-
     def check(self, out):
+        """The oracles run on the edge table the pass built; the extras'
+        oracles reuse it in ``check_extras``."""
         t = self.tally
         src, dst, w = _arrays(out["edges"], "src", "dst", "weight")
         order = np.lexsort((dst, src))
         src, dst, w = src[order], dst[order], w[order]
         ids = np.sort(_arrays(out["nodes"], "id")[0])
-        if self.digest is None:
-            self._oracles(src, dst, w, ids)
-        t.check("graph.build", _digest(src, dst, w, ids) == self.digest,
-                detail="the edge table differs from the first pass's")
+        self.src, self.dst, self.ids = src, dst, ids
+        self.edges_hash = _digest(src, dst, w, ids)
 
         pr = out["pr"]
-        if pr.iterations not in self.want_ranks:
-            self.want_ranks[pr.iterations] = oracles.pagerank(
-                self.src, self.dst, self.w, ids, pr.iterations
-            )
+        want = oracles.pagerank(src, dst, w, ids, pr.iterations)
         got = _align(ids, *_arrays(out["ranks"], "id", "rank"))
-        t.check("graph.pagerank", got is not None and np.allclose(
-            got, self.want_ranks[pr.iterations], rtol=0, atol=1e-12),
-            detail="ranks differ from the numpy power iteration")
+        t.check("graph.pagerank", got is not None and np.allclose(got, want, rtol=0, atol=1e-12),
+                detail="ranks differ from the numpy power iteration")
 
+        want = oracles.components(src, dst, ids)
         got = _align(ids, *_arrays(out["components"], "id", "component"))
-        t.check("graph.components", got is not None and np.array_equal(got, self.want_comp),
+        t.check("graph.components", got is not None and np.array_equal(got, want),
                 detail="components differ from union-find")
 
-        t.check("graph.triangles", out["triangles"] == self.want_triangles,
-                detail=f"{out['triangles']} != networkx {self.want_triangles}")
+        want = oracles.triangle_count(src, dst)
+        t.check("graph.triangles", out["triangles"] == want,
+                detail=f"{out['triangles']} != networkx {want}")
 
         cc = out["cc"]
         return {
@@ -275,18 +262,15 @@ class CrawlPipeline(Workload):
             "edges": len(self.src),
             "hub_share": _top_share(self.dst),
             "bfs_source": self.source,
-            "edges_hash": self.digest,
+            "edges_hash": self.edges_hash,
         }
 
-    def stage_metrics(self, passes):
-        def s(name):
-            return median(_named(passes, name))
-
+    def stage_metrics(self, spans, out):
         return {
-            "build_pages_per_s": self.N_PAGES / s("graph.build"),
-            "pagerank_s": s("graph.pagerank"),
-            "components_s": s("graph.components"),
-            "triangles_s": s("graph.triangles"),
+            "build_pages_per_s": self.N_PAGES / spans["graph.build"].seconds,
+            "pagerank_s": spans["graph.pagerank"].seconds,
+            "components_s": spans["graph.components"].seconds,
+            "triangles_s": spans["graph.triangles"].seconds,
         }
 
 
@@ -313,7 +297,7 @@ class IngestServe(Workload):
     def setup(self, tracer, rep):
         from plwordnet_spark.corpus import generate_pages
 
-        path = self.sandbox.path(f"pages_{rep}")
+        path = self.path(f"pages_{rep}")
         with tracer.span("corpus"):
             (
                 generate_pages(self.spark, self.N_PAGES, self.seed)
@@ -326,13 +310,18 @@ class IngestServe(Workload):
         self.pages_df = self.spark.read.parquet(path)
 
     def prepare(self):
-        """Seeded lookup keys, a share of them absent, and top-k queries:
-        the embeddings of sampled pages' own text. The query frame is
-        local data, so no cache backs it."""
+        """Every page's embedding (the pooling oracle's input), seeded
+        lookup keys, a share of them absent, and top-k queries: the
+        embeddings of sampled pages' own text. The query frame is local
+        data, so no cache backs it."""
         from plwordnet_spark.vectors.hash_embed import hash_embedding
 
-        (ids,) = _arrays(self.pages_df.select(F.xxhash64("url").alias("id")), "id")
-        ids = np.sort(ids)
+        emb = self.pages_df.select(
+            F.xxhash64("url").alias("id"),
+            hash_embedding(F.col("text"), dim=self.DIM).alias("embedding"),
+        ).toPandas().sort_values("id")
+        ids = self.page_ids = emb["id"].to_numpy()
+        self.page_vecs = np.stack(emb["embedding"].to_numpy())
         rng = np.random.default_rng(self.seed + 2)
         n_miss = int(self.N_LOOKUPS * self.MISS_SHARE)
         present = rng.choice(ids, size=self.N_LOOKUPS - n_miss)
@@ -340,25 +329,15 @@ class IngestServe(Workload):
         keys = np.concatenate([present, absent[~np.isin(absent, ids)]])
         rng.shuffle(keys)
         self.keys = [int(k) for k in keys]
-        chosen = [int(q) for q in rng.choice(ids, size=self.N_QUERIES, replace=False)]
-        queries = (
-            self.pages_df.select(
-                F.xxhash64("url").alias("query_id"),
-                hash_embedding(F.col("text"), dim=self.DIM).alias("embedding"),
-            )
-            .filter(F.col("query_id").isin(chosen))
-            .toPandas()
-            .sort_values("query_id")
-        )
-        self.query_ids = queries["query_id"].to_numpy()
-        self.query_vecs = np.stack(queries["embedding"].to_numpy())
+        chosen = np.searchsorted(ids, np.sort(rng.choice(ids, size=self.N_QUERIES, replace=False)))
+        self.query_ids = ids[chosen]
+        self.query_vecs = self.page_vecs[chosen]
         self.queries = self.spark.createDataFrame(
             [(int(q), v.tolist()) for q, v in zip(self.query_ids, self.query_vecs)],
             "query_id long, embedding array<double>",
         )
-        self.corpus_ids = None  # the oracles are built on the first pass
 
-    def run_pass(self, tracer, index):
+    def run_pass(self, tracer):
         from plwordnet_spark.storage.serving import PointIndex
         from plwordnet_spark.streaming.ingest import (
             EdgeLog,
@@ -370,8 +349,7 @@ class IngestServe(Workload):
         from plwordnet_spark.vectors.pooling import mean_pool
 
         spark = self.spark
-        out = {"log": self.sandbox.path(f"edgelog_{index}"),
-               "ckpt": self.sandbox.path(f"ckpt_{index}")}
+        out = {"log": self.path("edgelog"), "ckpt": self.path("ckpt")}
         with tracer.span("streaming.ingest"):
             query = stream_pages_to_edges(
                 spark,
@@ -384,7 +362,7 @@ class IngestServe(Workload):
         self.tally.ops()
         with tracer.span("storage.snapshots.latest"):
             merged, _ = EdgeLog(spark, out["log"]).latest()
-            edges = out["edges"] = _materialise(merged)
+            edges = out["edges"] = self.materialise(merged)
         self.tally.ops()
         pages = spark.read.parquet(self.pages_dir)
         with tracer.span("vectors.embed_pool"):
@@ -395,7 +373,7 @@ class IngestServe(Workload):
             neighbours = edges.select(F.col("src").alias("id"), "dst").join(
                 page_vecs.withColumnRenamed("id", "dst"), "dst"
             ).select("id", "embedding")
-            vectors = out["vectors"] = _materialise(
+            vectors = out["vectors"] = self.materialise(
                 mean_pool(page_vecs.unionByName(neighbours), ["id"], normalize=True)
             )
         self.tally.ops()
@@ -408,7 +386,7 @@ class IngestServe(Workload):
             )
         self.tally.ops()
         with tracer.span("vectors.ivf_assign"):
-            assigned = _materialise(ivf_assign(vectors, centroids, id_col="id"))
+            assigned = self.materialise(ivf_assign(vectors, centroids, id_col="id"))
         self.tally.ops()
         latencies, results = out["latencies"], out["results"] = [], []
         with tracer.span("storage.serving.lookup"):
@@ -426,31 +404,30 @@ class IngestServe(Workload):
         self.tally.ops(self.N_QUERIES)
         return out
 
-    def _oracles(self, vec):
+    def check(self, out):
         """Reference edges from a batch ``build_graph`` on the same pages,
-        and the exact top-k, computed on the first pass."""
+        node vectors pooled in numpy from the page embeddings, the exact
+        top-k over the pass's node vectors, and every lookup's row."""
         from plwordnet_spark.graph.build import build_graph
 
+        t = self.tally
         reference = build_graph(self.spark.read.parquet(self.pages_dir)).edges
         self.want_edges = _edge_frame(reference.toPandas())
-        self.corpus_ids = vec["id"].to_numpy()
-        self.corpus = np.stack(vec["embedding"].to_numpy())
-        self.want_top = oracles.exact_topk(self.corpus, self.query_vecs, self.TOP_K)
-
-    def check(self, out):
-        t = self.tally
-        vec = out["vectors"].toPandas().sort_values("id")
-        if self.corpus_ids is None:
-            self._oracles(vec)
         got_edges = _edge_frame(out["edges"].toPandas())
         t.check("storage.snapshots", got_edges.equals(self.want_edges),
                 detail=f"EdgeLog has {len(got_edges)} edges, build_graph {len(self.want_edges)}")
-        same = (
-            np.array_equal(vec["id"].to_numpy(), self.corpus_ids)
-            and np.array_equal(np.stack(vec["embedding"].to_numpy()), self.corpus)
+
+        vec = out["vectors"].toPandas().sort_values("id")
+        self.corpus_ids = vec["id"].to_numpy()
+        self.corpus = np.stack(vec["embedding"].to_numpy())
+        want = oracles.neighbourhood_mean(
+            self.page_ids, self.page_vecs,
+            got_edges["src"].to_numpy(), got_edges["dst"].to_numpy(),
         )
-        t.check("vectors.embed_pool", same and len(vec) == self.N_PAGES,
-                detail="node vectors differ from the first pass's")
+        t.check("vectors.embed_pool", np.array_equal(self.corpus_ids, self.page_ids)
+                and np.allclose(self.corpus, want, rtol=1e-9, atol=1e-12),
+                detail="node vectors differ from the numpy neighbourhood mean")
+
         rows = {k: i for i, k in enumerate(self.corpus_ids)}
         wrong, hits = 0, 0
         for key, got in zip(self.keys, out["results"]):
@@ -464,55 +441,55 @@ class IngestServe(Workload):
             wrong += not ok
         t.check("storage.serving.lookup", wrong == 0, weight=wrong,
                 detail=f"{wrong} lookups returned a wrong row")
-        recall = self._recall(out["top"])
+        recall = self._recall(out["top"], oracles.exact_topk(self.corpus, self.query_vecs,
+                                                             self.TOP_K))
         t.check("vectors.ivf_topk", recall >= self.RECALL_FLOOR, weight=self.N_QUERIES,
                 detail=f"recall@{self.TOP_K} {recall:.3f} < {self.RECALL_FLOOR}")
+
         batches = [p["durationMs"]["triggerExecution"] for p in out["progress"]
                    if p["numInputRows"] > 0]
         compacting = batches[self.COMPACT_EVERY - 1::self.COMPACT_EVERY]
         plain = [d for i, d in enumerate(batches, 1) if i % self.COMPACT_EVERY]
-        files, live_mb = _parquet_files(out["log"])
+        merged = self.path("merged")
+        out["edges"].write.parquet(merged)
+        _, log_mb = _files(out["log"])
+        _, merged_mb = _files(merged, ".parquet")
+        files, _ = _files(out["log"], ".parquet")
         return {
             "streaming.ingest": {"micro_batches": len(batches),
                                  "batch_ms_p50": median(plain),
                                  "compaction_batch_ms_p50": median(compacting)},
-            "storage.snapshots": {"files": files, "live_mb": live_mb},
+            "storage.snapshots": {"files": files, "write_amp": log_mb / merged_mb},
             "vectors": {"ivf_recall_at_10": recall},
             "storage.serving": {"lookup_hit_frac": hits / len(self.keys)},
         }
 
-    def _recall(self, top) -> float:
+    def _recall(self, top, want_top) -> float:
         """Share of the exact top-k rows the IVF probe returned."""
         found = 0
-        for q, want in zip(self.query_ids, self.want_top):
+        for q, want in zip(self.query_ids, want_top):
             got = top.loc[top.query_id == q, "id"].to_numpy()
             found += np.isin(self.corpus_ids[want], got).sum()
         return float(found) / (self.N_QUERIES * self.TOP_K)
-
-    def cleanup_pass(self, out):
-        for key in ("log", "ckpt"):
-            shutil.rmtree(out[key], ignore_errors=True)
 
     def run_extras(self, tracer, out):
         """The relation-dataset export over domain membership of what was
         ingested."""
         pages = self.spark.read.parquet(self.pages_dir)
-        extra = {"export": self.sandbox.path("dataset")}
+        extra = {"export": self.path("dataset")}
         with tracer.span("datasets"):
             nodes = pages.select(
                 F.xxhash64("url").alias("id"), "url",
                 F.parse_url("url", F.lit("HOST")).alias("domain"),
             )
-            extra.update(export_dataset(tracer, out["edges"], nodes, self.seed,
-                                        self.MEMBER_SAMPLE, extra["export"]))
+            extra.update(export_dataset(tracer, self.materialise, out["edges"], nodes,
+                                        self.seed, self.MEMBER_SAMPLE, extra["export"]))
         self.tally.ops()
         super().run_extras(tracer, out)
         return extra
 
     def check_extras(self, extra):
-        facts = {"datasets": check_dataset(self.tally, extra)}
-        shutil.rmtree(extra["export"], ignore_errors=True)
-        return facts
+        return {"datasets": check_dataset(self.tally, extra)}
 
     def fingerprint(self):
         return {
@@ -524,24 +501,21 @@ class IngestServe(Workload):
             "vectors_hash": _digest(self.corpus_ids, self.corpus),
         }
 
-    def stage_metrics(self, passes):
-        def s(name):
-            return _named(passes, name)
-
-        build = [a + b + c for a, b, c in zip(
-            s("storage.serving.build"), s("vectors.kmeans"), s("vectors.ivf_assign"))]
-        lat_us = [ns / 1e3 for p in passes for ns in p.out["latencies"]]
+    def stage_metrics(self, spans, out):
+        lat_us = [ns / 1e3 for ns in out["latencies"]]
         return {
-            "ingest_pages_per_s": self.N_PAGES / median(s("streaming.ingest")),
-            "index_build_s": median(build),
+            "ingest_pages_per_s": self.N_PAGES / spans["streaming.ingest"].seconds,
+            "index_build_s": sum(spans[n].seconds for n in (
+                "storage.serving.build", "vectors.kmeans", "vectors.ivf_assign")),
             "lookup_p50_us": percentile(lat_us, 50),
             "lookup_p99_us": percentile(lat_us, 99),
-            "topk_queries_per_s": self.N_QUERIES / median(s("vectors.ivf_topk")),
+            "topk_queries_per_s": self.N_QUERIES / spans["vectors.ivf_topk"].seconds,
         }
 
 
 # --------------------------------------------------------------------------
-def export_dataset(tracer, edges, nodes, seed: int, sample: int, path: str) -> dict:
+def export_dataset(tracer, materialise, edges, nodes, seed: int, sample: int,
+                   path: str) -> dict:
     """Relation dataset over domain membership: synonymy cliques within a
     domain and cross-product expansion over cross-domain links, balanced
     with synthetic negatives, split and priority-deduplicated, written as
@@ -572,7 +546,7 @@ def export_dataset(tracer, edges, nodes, seed: int, sample: int, path: str) -> d
             .distinct()
         )
         urls = nodes.select("id", "url")
-        positives = _materialise(
+        positives = materialise(
             union_relation_streams(
                 {
                     "synonymy": synonymy_cliques(membership),
@@ -587,7 +561,7 @@ def export_dataset(tracer, edges, nodes, seed: int, sample: int, path: str) -> d
                     F.col("rel_source").alias("relation_name"))
         )
     with tracer.span("datasets.balance"):
-        negatives = _materialise(
+        negatives = materialise(
             negative_synthesis(urls.select(F.col("url").alias("text_parent")), positives,
                                seed=seed)
         )
@@ -648,12 +622,13 @@ def _edge_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf[cols].astype({"rel_id": "int64"}).sort_values(cols).reset_index(drop=True)
 
 
-def _parquet_files(root: str) -> tuple[int, float]:
-    """Live Parquet files under ``root`` and their size in MB."""
+def _files(root: str, suffix: str = "") -> tuple[int, float]:
+    """Files under ``root`` whose names end in ``suffix``, and their size
+    in MB."""
     n, size = 0, 0
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
-            if f.endswith(".parquet"):
+            if f.endswith(suffix):
                 n += 1
                 size += os.path.getsize(os.path.join(dirpath, f))
     return n, size / 2**20
