@@ -14,9 +14,9 @@ Scale design:
 * the edge table is augmented ONCE with the scatter share
   ``weight / out_weight(src)`` and hash-partitioned by ``src``, then
   cached — per iteration the only shuffles are the rank join on ``src``
-  and the gather ``groupBy(dst)``; map-side partial aggregation absorbs
-  hub in-degree skew, and the optional salted two-phase gather splits
-  hot dst keys explicitly (north rule),
+  and the gather ``groupBy(dst)``; the gather's map-side partial
+  aggregation folds a hub dst to at most one row per map partition, so
+  hub in-degree skew needs no salting (BENCH/SKEW.md),
 * ranks is the only mutable state: ``(id, rank)``, one row per node,
 * driver sees two scalars per iteration (dangling mass, L1 delta) —
   everything else stays distributed; lineage is truncated by the
@@ -32,11 +32,6 @@ from plwordnet_spark.graph.pregel import PregelRunner, PregelResult, loop_tuning
 
 __all__ = ["pagerank"]
 
-# driver-side cap on collected hot-src ids (hot keys are hubs; above
-# this the graph isn't skewed, it's dense — remaining above-threshold
-# srcs stay on the co-partitioned cold path)
-_MAX_HOT_SRCS = 10_000
-
 
 def pagerank(
     spark: SparkSession,
@@ -48,46 +43,22 @@ def pagerank(
     weighted: bool = True,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
-    salted_gather: bool = False,
-    n_salts: int = 16,
     initial_ranks: DataFrame | None = None,
     start_iteration: int = 0,
     check_interval: int = 1,
-    use_csr: bool = False,
-    csr_workdir: str | None = None,
-    csr_buckets: int | None = None,
-    auto_tune: bool = True,
     retain_snapshots: int | None = None,
     personalization: DataFrame | None = None,
-    hot_src_threshold: int | None = None,
 ) -> PregelResult:
-    """edges(src, dst[, weight[, salt]]) → ranks(id, rank) summing to 1.
+    """edges(src, dst[, weight]) → ranks(id, rank) summing to 1.
 
     ``nodes``: optional (id, …) universe; defaults to ids appearing in
-    edges. ``salted_gather``: two-phase aggregation splitting each dst
-    key into ``salt`` sub-keys before the final combine. Default OFF by
-    measurement (BENCH/SKEW.md): the gather's map-side partial
-    aggregation already folds a hub dst to ≤ one row per map partition,
-    so for this algebraic sum the explicit salt only adds a shuffle
-    phase (~1.6× slower at a 10%-single-hub graph). Reserve it for
-    non-algebraic gathers (collect_list-style state that partial
-    aggregation cannot shrink). ``hot_src_threshold``: out-degree above
-    which a src is treated as a hot key — the OTHER hub skew, which
-    gather salting and partial aggregation do NOT address: a hub src's
-    out-edges all hash to one partition of the src-partitioned scatter
-    table, making a straggler task in the per-iteration rank join. The
-    split-join treatment (BENCH/SKEW.md): hot-src edges are separated
-    ONCE into a round-robin-partitioned slice whose join uses a
-    broadcast of just the hot ranks rows (at most ~n_hot rows/iter over
-    the wire), so the hub's edges spread across every core; cold edges
-    keep the co-partitioned join. None = off. Results are identical
-    either way (property-tested). ``use_csr``: stage the
-    adjacency once as per-partition CSR blocks (graph/csr.py) so each
-    iteration ships only the rank vector to Python workers; results are
-    identical to the join path (property-tested). ``personalization``:
-    optional (id, p) teleport distribution (topic-sensitive PageRank) —
-    p is normalized to sum 1, missing ids get 0; teleport AND dangling
-    mass redistribute ∝ p. None keeps the uniform scalar fast path."""
+    edges. ``initial_ranks`` / ``start_iteration``: resume from a
+    checkpointed (id, rank) state. ``check_interval`` > 1 skips the
+    convergence action on intermediate iterations (dangling-free graphs
+    only). ``personalization``: optional (id, p) teleport distribution
+    (topic-sensitive PageRank) — p is normalized to sum 1, missing ids
+    get 0; teleport AND dangling mass redistribute ∝ p. None keeps the
+    uniform scalar fast path."""
     weight_col = F.col("weight") if weighted and "weight" in edges.columns else F.lit(1.0)
     edge_w = edges.select("src", "dst", weight_col.cast("double").alias("w"))
 
@@ -99,291 +70,167 @@ def pagerank(
         )
     else:
         ids = nodes.select("id").distinct()
-    # loop tuning (AQE off, right-sized shuffles) measured beneficial for
-    # the join path only; the CSR path manages its own bucket layout.
-    # auto_tune=False keeps session-level configs (the cluster-sized
-    # setting) — used by scaling measurements where shuffle width must
-    # track cluster size
-    n_edge_rows = edge_w.count() if (auto_tune and not use_csr) else None
-    with loop_tuning(spark, n_edge_rows):
-        return _pagerank_loop(
-            spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-            checkpoint_interval, salted_gather, n_salts, initial_ranks,
-            start_iteration, check_interval, use_csr, csr_workdir, csr_buckets,
-            retain_snapshots, personalization, hot_src_threshold,
-        )
+    # loop tuning (AQE off, right-sized shuffles) applies only below the
+    # small-state edge count; above it the session's settings stand
+    with loop_tuning(spark, edge_w.count()):
+        ids = ids.repartition("id").cache()
+        n_nodes = ids.count()
+        if n_nodes == 0:
+            return PregelResult(
+                state=spark.createDataFrame([], "id long, rank double"),
+                iterations=0,
+                converged=True,
+            )
 
-
-def _pagerank_loop(
-    spark, edge_w, ids, alpha, tol, max_iterations, checkpoint_dir,
-    checkpoint_interval, salted_gather, n_salts, initial_ranks,
-    start_iteration, check_interval, use_csr, csr_workdir, csr_buckets,
-    retain_snapshots=None, personalization=None, hot_src_threshold=None,
-) -> PregelResult:
-    ids = ids.repartition("id").cache()
-    n_nodes = ids.count()
-    if n_nodes == 0:
-        return PregelResult(
-            state=spark.createDataFrame([], "id long, rank double"),
-            iterations=0,
-            converged=True,
-        )
-
-    out_w = edge_w.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("out_w"))
-    # scatter share precomputed once; partitioned by src for the per-
-    # iteration rank join (no re-exchange of the big table per step).
-    # shuffle-hash hint: the default sort-merge would sort the FULL edge
-    # table once per pagerank() call just to attach a per-src scalar
-    # (guide §3.1); hashing the node-count-sized out_w side avoids it.
-    scatter_base = edge_w.join(
-        out_w.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
-    ).select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-
-    # hot-src split (join path only — the CSR layout spreads a hub's
-    # out-edges across buckets by construction): hot srcs' edges go to a
-    # round-robin-partitioned slice joined against a BROADCAST of just
-    # the hot rank rows, so the hub's edges occupy every core instead of
-    # one fat hash partition. The hot-id set stays a DISTRIBUTED frame —
-    # bounded at _MAX_HOT_SRCS rows (hot keys are hubs; a graph with
-    # millions of above-threshold srcs isn't skewed, it's dense) and
-    # cached once, then consumed only through broadcast semi/anti joins:
-    # no driver-side literal list, so the per-iteration plan carries one
-    # small broadcast instead of a 10k-term In expression re-analyzed
-    # every step.
-    hot_src_df = None
-    scatter_hot = None
-    if hot_src_threshold is not None and not use_csr:
-        hot_src_df = (
-            edge_w.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") > hot_src_threshold)
-            .orderBy(F.desc("deg"), "src")
-            .limit(_MAX_HOT_SRCS)
-            .select("src")
-            .cache()
-        )
-        # materialized here so the per-iteration broadcast re-reads the
-        # cache instead of re-running the degree aggregation (Catalyst
-        # does not reuse subtrees across a broadcast exchange)
-        if hot_src_df.count() == 0:
-            hot_src_df.unpersist()
-            hot_src_df = None
-    adj = None
-    tmp_workdir = None
-    scatter = None
-    if use_csr:
-        import tempfile
-
-        from plwordnet_spark.graph.csr import CsrAdjacency
-
-        if csr_workdir is None:
-            tmp_workdir = tempfile.mkdtemp(prefix="plwn_csr_")
-        workdir = csr_workdir or tmp_workdir
-        buckets = csr_buckets or spark.sparkContext.defaultParallelism
-        adj = CsrAdjacency(spark, workdir, buckets, n_rows_hint=n_nodes)
-        # stage straight from the share plan: the CSR loop never touches
-        # the scatter DataFrame again, so caching + materializing it
-        # first (the old path) paid one full extra pass over the edges
-        adj.stage(scatter_base)
-    elif hot_src_df is not None:
-        scatter_hot = (
-            scatter_base.join(F.broadcast(hot_src_df), "src", "left_semi")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .cache()
-        )
-        scatter_hot.count()
+        out_w = edge_w.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("out_w"))
+        # scatter share precomputed once; partitioned by src for the per-
+        # iteration rank join (no re-exchange of the big table per step).
+        # shuffle-hash hint: the default sort-merge would sort the FULL edge
+        # table once per pagerank() call just to attach a per-src scalar
+        # (guide §3.1); hashing the node-count-sized out_w side avoids it.
         scatter = (
-            scatter_base.join(F.broadcast(hot_src_df), "src", "left_anti")
+            edge_w.join(out_w.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
             .repartition("src")
             .cache()
         )
         scatter.count()  # materialize before the loop
-    else:
-        scatter = scatter_base.repartition("src").cache()
-        scatter.count()  # materialize before the loop
 
-    dangling = ids.join(out_w, "id", "left_anti").withColumn(
-        "_is_dangling", F.lit(True)
-    ).cache()  # no out-edges
+        dangling = ids.join(out_w, "id", "left_anti").withColumn(
+            "_is_dangling", F.lit(True)
+        ).cache()  # no out-edges
 
-    # teleport distribution: None = uniform scalar fast path; otherwise
-    # (id, p) normalized to sum 1, cached co-partitioned with ids
-    pvec = None
-    if personalization is not None:
-        p_raw = ids.join(
-            personalization.select("id", F.col("p").cast("double").alias("_p")),
-            "id",
-            "left",
-        ).select("id", F.coalesce("_p", F.lit(0.0)).alias("_p"))
-        p_sum = float(p_raw.agg(F.sum("_p")).first()[0] or 0.0)
-        if p_sum <= 0:
-            raise ValueError("personalization must have positive total mass")
-        pvec = (
-            p_raw.select("id", (F.col("_p") / F.lit(p_sum)).alias("p"))
-            .repartition("id")
-            .cache()
-        )
-        pvec.count()
-
-    # resume path: seed from a checkpointed (id, rank) state instead of
-    # the teleport vector (north rule: resumable from checkpoint)
-    if initial_ranks is not None:
-        init = initial_ranks.select("id", "rank")
-    elif pvec is not None:
-        init = pvec.select("id", F.col("p").alias("rank"))
-    else:
-        init = ids.select("id", F.lit(1.0 / n_nodes).alias("rank"))
-
-    # the dangling mass of the CURRENT state is measured in the previous
-    # iteration's delta action (one combined scan instead of a separate
-    # per-iteration job); graphs with no dangling nodes (checked once)
-    # skip the bookkeeping entirely
-    n_dangling = dangling.count()
-    if n_dangling == 0:
-        state_dm = {"dm": 0.0}
-    else:
-        state_dm = {
-            "dm": float(
-                init.join(dangling.select("id"), "id")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
+        # teleport distribution: None = uniform scalar fast path; otherwise
+        # (id, p) normalized to sum 1, cached co-partitioned with ids
+        pvec = None
+        if personalization is not None:
+            p_raw = ids.join(
+                personalization.select("id", F.col("p").cast("double").alias("_p")),
+                "id",
+                "left",
+            ).select("id", F.coalesce("_p", F.lit(0.0)).alias("_p"))
+            p_sum = float(p_raw.agg(F.sum("_p")).first()[0] or 0.0)
+            if p_sum <= 0:
+                raise ValueError("personalization must have positive total mass")
+            pvec = (
+                p_raw.select("id", (F.col("_p") / F.lit(p_sum)).alias("p"))
+                .repartition("id")
+                .cache()
             )
-        }
-        if check_interval != 1:
-            raise ValueError(
-                "check_interval > 1 requires a dangling-free graph: the "
-                "dangling mass is refreshed by the delta action"
+            pvec.count()
+
+        # resume path: seed from a checkpointed (id, rank) state instead of
+        # the teleport vector (north rule: resumable from checkpoint)
+        if initial_ranks is not None:
+            init = initial_ranks.select("id", "rank")
+        elif pvec is not None:
+            init = pvec.select("id", F.col("p").alias("rank"))
+        else:
+            init = ids.select("id", F.lit(1.0 / n_nodes).alias("rank"))
+
+        # the dangling mass of the CURRENT state is measured in the previous
+        # iteration's delta action (one combined scan instead of a separate
+        # per-iteration job); graphs with no dangling nodes (checked once)
+        # skip the bookkeeping entirely
+        n_dangling = dangling.count()
+        if n_dangling == 0:
+            state_dm = {"dm": 0.0}
+        else:
+            state_dm = {
+                "dm": float(
+                    init.join(dangling.select("id"), "id")
+                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                    .first()[0]
+                )
+            }
+            if check_interval != 1:
+                raise ValueError(
+                    "check_interval > 1 requires a dangling-free graph: the "
+                    "dangling mass is refreshed by the delta action"
+                )
+
+        def step(ranks: DataFrame) -> DataFrame:
+            """scatter join → gather → teleport + damped incoming.
+
+            Both joins carry shuffle-hash hints (guide §3.1). On the rank
+            side, without it the planner either broadcasts the rank vector
+            (measured at 24M edges: a 2.2M-row hashed relation built
+            serially on the driver EVERY iteration — and a guaranteed
+            driver OOM at 10^9 nodes) or falls back to sort-merge,
+            re-sorting the cached scatter table each step; the hinted plan
+            shuffles only the node-count-sized rank rows into the scatter
+            table's existing partitioning. On the gathered side, the
+            default SortMergeJoin would re-sort BOTH the node universe and
+            the gather output every iteration; hashing the gather output
+            (≤ one row per node) against the co-partitioned ids avoids
+            both sorts. The uniform path keeps the original scalar float-op
+            order (oracle parity)."""
+            dm = state_dm["dm"]
+            gathered = (
+                scatter.join(
+                    ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+                )
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("share")).alias("incoming"))
             )
-
-    def _assemble(gathered: DataFrame, dm: float) -> DataFrame:
-        """teleport + damped incoming → next rank vector; the uniform
-        path keeps the original scalar float-op order (oracle parity).
-
-        The gathered side carries a shuffle-hash hint: the planner's
-        default here is a SortMergeJoin that re-sorts BOTH the node
-        universe and the gather output every iteration (guide §3.1 —
-        "pick the strategy deliberately"); hashing the gather output
-        (≤ one row per node) against the co-partitioned ids avoids both
-        sorts, and at cluster scale never tempts the planner into
-        broadcasting a node-count-sized vector."""
-        g = gathered.withColumnRenamed("dst", "id").hint("shuffle_hash")
-        if pvec is None:
-            base = (1.0 - alpha) / n_nodes + alpha * dm / n_nodes
-            return ids.join(g, "id", "left").select(
+            g = gathered.withColumnRenamed("dst", "id").hint("shuffle_hash")
+            if pvec is None:
+                base = (1.0 - alpha) / n_nodes + alpha * dm / n_nodes
+                return ids.join(g, "id", "left").select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+            scalar = (1.0 - alpha) + alpha * dm
+            return pvec.join(g, "id", "left").select(
                 "id",
                 (
-                    F.lit(base)
+                    F.col("p") * F.lit(scalar)
                     + F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
                 ).alias("rank"),
             )
-        scalar = (1.0 - alpha) + alpha * dm
-        return pvec.join(g, "id", "left").select(
-            "id",
-            (
-                F.col("p") * F.lit(scalar)
-                + F.lit(alpha) * F.coalesce(F.col("incoming"), F.lit(0.0))
-            ).alias("rank"),
-        )
 
-    def step(ranks: DataFrame) -> DataFrame:
-        dm = state_dm["dm"]
-        if adj is not None:
-            gathered = adj.gather(
-                ranks.withColumn("part", adj.bucket_col(F.col("id")))
+        def l1_delta(old: DataFrame, new: DataFrame) -> float:
+            # one scan: L1 convergence error (+ next iteration's dangling
+            # mass when the graph has dangling nodes)
+            # both sides are checkpointed (no size estimates) — hash-join
+            # instead of the planner's sort-merge fallback
+            joined = old.withColumnRenamed("rank", "r0").join(
+                new.hint("shuffle_hash"), "id"
             )
-            return _assemble(gathered, dm)
-        # shuffle-hash hint on the rank side (guide §3.1): without it the
-        # planner either broadcasts the rank vector (measured at 24M
-        # edges: a 2.2M-row hashed relation built serially on the driver
-        # EVERY iteration — and a guaranteed driver OOM at 10^9 nodes) or
-        # falls back to sort-merge, re-sorting the cached scatter table
-        # each step. The hinted plan shuffles only the node-count-sized
-        # rank rows into the scatter table's existing partitioning and
-        # builds per-partition hash tables in parallel. Results are
-        # join-strategy-independent (same partials feed the gather sum).
-        contribs = scatter.join(
-            ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
-        )
-        if scatter_hot is not None:
-            hot_ranks = ranks.withColumnRenamed("id", "src").join(
-                F.broadcast(hot_src_df), "src", "left_semi"
-            )
-            contribs = contribs.unionByName(
-                scatter_hot.join(F.broadcast(hot_ranks), "src")
-            )
-        if salted_gather:
-            # phase 1: partial sums per (dst, salt) — splits hub keys
-            # across n_salts reducers; phase 2: tiny combine per dst
-            gathered = (
-                contribs.withColumn(
-                    "salt", F.pmod(F.xxhash64("src"), F.lit(n_salts))
+            if n_dangling == 0:
+                return float(
+                    joined.agg(F.sum(F.abs(F.col("rank") - F.col("r0")))).first()[0]
                 )
-                .groupBy("dst", "salt")
-                .agg(F.sum(F.col("rank") * F.col("share")).alias("partial"))
-                .groupBy("dst")
-                .agg(F.sum("partial").alias("incoming"))
-            )
-        else:
-            gathered = contribs.groupBy("dst").agg(
-                F.sum(F.col("rank") * F.col("share")).alias("incoming")
-            )
-        return _assemble(gathered, dm)
+            joined = joined.join(dangling.select("id", "_is_dangling"), "id", "left")
+            row = joined.agg(
+                F.sum(F.abs(F.col("rank") - F.col("r0"))).alias("l1"),
+                F.coalesce(
+                    F.sum(F.when(F.col("_is_dangling"), F.col("rank"))), F.lit(0.0)
+                ).alias("dm"),
+            ).first()
+            state_dm["dm"] = float(row["dm"])
+            return float(row["l1"])
 
-    def l1_delta(old: DataFrame, new: DataFrame) -> float:
-        # one scan: L1 convergence error (+ next iteration's dangling mass
-        # when the graph has dangling nodes)
-        # both sides are checkpointed (no size estimates) — hash-join
-        # instead of the planner's sort-merge fallback
-        joined = old.withColumnRenamed("rank", "r0").join(
-            new.hint("shuffle_hash"), "id"
+        runner = PregelRunner(
+            spark,
+            max_iterations=max_iterations,
+            tol=n_nodes * tol,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_interval=checkpoint_interval,
+            check_interval=check_interval,
+            # the step consumes ranks linearly (single reference in the
+            # gather join), so the soft-persist chain is safe and saves one
+            # job/iter
+            truncate_interval=4,
+            retain_snapshots=retain_snapshots,
         )
-        if n_dangling == 0:
-            return float(
-                joined.agg(F.sum(F.abs(F.col("rank") - F.col("r0")))).first()[0]
-            )
-        joined = joined.join(dangling.select("id", "_is_dangling"), "id", "left")
-        row = joined.agg(
-            F.sum(F.abs(F.col("rank") - F.col("r0"))).alias("l1"),
-            F.coalesce(
-                F.sum(F.when(F.col("_is_dangling"), F.col("rank"))), F.lit(0.0)
-            ).alias("dm"),
-        ).first()
-        state_dm["dm"] = float(row["dm"])
-        return float(row["l1"])
-
-    runner = PregelRunner(
-        spark,
-        max_iterations=max_iterations,
-        tol=n_nodes * tol,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_interval=checkpoint_interval,
-        check_interval=check_interval,
-        # the step consumes ranks linearly (single reference in the gather
-        # join), so the soft-persist chain is safe and saves one job/iter.
-        # The hot-src split references ranks TWICE (cold join + hot
-        # broadcast filter) — soft chains would inline the lazy parent
-        # subtree per reference and grow the plan exponentially, so that
-        # path hard-truncates every iteration.
-        truncate_interval=1 if scatter_hot is not None else 4,
-        retain_snapshots=retain_snapshots,
-    )
-    try:
         result = runner.run(init, step, l1_delta, start_iteration=start_iteration)
-    finally:
-        if tmp_workdir is not None:
-            # the final state is materialized by the runner (eager
-            # localCheckpoint / snapshot) before we drop the staged blocks
-            import shutil
-
-            shutil.rmtree(tmp_workdir, ignore_errors=True)
-    if scatter is not None:
         scatter.unpersist()
-    if scatter_hot is not None:
-        scatter_hot.unpersist()
-    if hot_src_df is not None:
-        hot_src_df.unpersist()
-    dangling.unpersist()
-    if pvec is not None:
-        pvec.unpersist()
-    ids.unpersist()
-    return result
+        dangling.unpersist()
+        if pvec is not None:
+            pvec.unpersist()
+        ids.unpersist()
+        return result

@@ -25,7 +25,6 @@ iteration.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -61,10 +60,11 @@ def loop_tuning(spark: SparkSession, n_rows: int | None):
     Measured on local[32], 281k edges: AQE on + 32 shuffle partitions =
     1.50 s/iter; AQE off + right-sized partitions = 0.60 s/iter. AQE's
     per-stage materialization barriers and re-planning buy nothing for a
-    fixed, repeated plan (skew is handled explicitly by salting), and
-    tiny tasks pay pure launch overhead. Only applies when ``n_rows``
-    says the state is small — at production scale the session defaults
-    (AQE on, wide shuffles) stand; always restored afterwards.
+    fixed, repeated plan (hub skew is absorbed by the gathers' map-side
+    partial aggregation), and tiny tasks pay pure launch overhead. Only
+    applies when ``n_rows`` says the state is small — at production
+    scale the session defaults (AQE on, wide shuffles) stand; always
+    restored afterwards.
     """
     if n_rows is None:
         yield
@@ -82,16 +82,6 @@ def loop_tuning(spark: SparkSession, n_rows: int | None):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _append_plan(df: DataFrame, path: str) -> None:
-    """Append ``df``'s formatted physical plan to ``path`` (diagnostic
-    only, driven by $SPARK_GRAFT_PLAN_DUMP)."""
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-    with open(path, "a", encoding="utf-8") as fh:
-        fh.write(plan + "\n")
 
 
 @dataclass
@@ -185,15 +175,9 @@ class PregelRunner:
             hard_cut = iteration % self.truncate_interval == 0 or (
                 self.store is not None and iteration % self.checkpoint_interval == 0
             )
-            stepped = step(state)
-            # diagnostic hook (plan-audit evidence): dump the REAL
-            # first-iteration step plan — never set in production runs
-            dump = os.environ.get("SPARK_GRAFT_PLAN_DUMP")
-            if dump and iteration == start_iteration + 1:
-                _append_plan(stepped, dump)
             # truncate BEFORE measuring delta: the delta action then reads
             # the materialized state instead of re-executing the step plan
-            new_state = self._truncate(stepped, iteration, {})
+            new_state = self._truncate(step(state), iteration, {})
             check_now = delta is not None and (
                 iteration % self.check_interval == 0
                 or iteration == self.max_iterations

@@ -1,7 +1,7 @@
 """Graph profiling statistics — the pre-flight checks of a web-graph run.
 
 Before any iterative job on a crawl-scale link graph, the operator
-questions are: how skewed are the degrees (salting / hot-src split
+questions are: how skewed are the degrees (hub salting
 needed?), how many vertices/edges after dedup, is the degree
 distribution the expected power law? The reference answers these with
 in-memory NetworkX-style accounting over the WordNet graph
@@ -308,8 +308,8 @@ def rich_club(edges: DataFrame, ks: list[int], *, round_to: int = 8) -> DataFram
     φ(k) = 2·E_k / (N_k·(N_k−1)) where N_k = nodes of degree > k and
     E_k = edges between two such nodes (Zhou & Mondragón 2004). A
     rising φ(k) tail is the "hubs link to hubs" signature of web/AS
-    graphs — it decides whether hot-hub handling (salting, hot-src
-    split) pays on THIS crawl.
+    graphs — it decides whether hot-hub handling (hub salting) pays
+    on THIS crawl.
 
     Scale shape: degrees once (one agg), edge min-endpoint-degree via
     two joins against the (id, degree) frame, then BOTH sides collapse

@@ -69,8 +69,21 @@ def graphs():
     return [("hand", hand), ("er", er), ("ba", ba_directed)]
 
 
+def _hub_src_graph() -> nx.DiGraph:
+    """Random 60-node graph plus one hub src (0) linking to half the
+    nodes: out-degree skew on the co-partitioned rank join."""
+    import random
+
+    rng = random.Random(11)
+    n = 60
+    g = nx.DiGraph()
+    g.add_edges_from((rng.randrange(n), rng.randrange(n)) for _ in range(240))
+    g.add_edges_from((0, d) for d in range(1, n, 2))
+    return g
+
+
 def test_pagerank_matches_networkx(spark, graphs):
-    for name, g in graphs:
+    for name, g in graphs + [("hub_src", _hub_src_graph())]:
         g = nx.DiGraph(g)
         g.remove_edges_from(nx.selfloop_edges(g))
         if g.number_of_edges() == 0:
@@ -88,18 +101,27 @@ def test_pagerank_matches_networkx(spark, graphs):
             )
 
 
-def test_pagerank_weighted_and_salted(spark):
+def test_pagerank_weighted_matches_networkx(spark):
     g = nx.DiGraph()
     weighted_edges = [(0, 1, 3.0), (0, 2, 1.0), (1, 2, 2.0), (2, 0, 1.0), (3, 0, 5.0)]
     g.add_weighted_edges_from(weighted_edges)
     edges = _edges_df(spark, [(u, v) for u, v, _ in weighted_edges],
                       [w for _, _, w in weighted_edges])
-    for salted in (False, True):
-        result = pagerank(spark, edges, tol=1e-9, salted_gather=salted, n_salts=4)
-        got = {r.id: r.rank for r in result.state.collect()}
-        expected = _pagerank_oracle(g, alpha=0.85, tol=1e-9)
-        for node, rank in expected.items():
-            assert math.isclose(got[int(node)], rank, abs_tol=1e-6), (salted, node)
+    result = pagerank(spark, edges, tol=1e-9)
+    got = {r.id: r.rank for r in result.state.collect()}
+    expected = _pagerank_oracle(g, alpha=0.85, tol=1e-9)
+    assert result.converged
+    assert set(got) == {int(n) for n in expected}
+    for node, rank in expected.items():
+        assert math.isclose(got[int(node)], rank, abs_tol=1e-6), node
+
+
+def test_pagerank_check_interval_rejects_dangling_nodes(spark):
+    """check_interval > 1 skips the delta action that refreshes the
+    dangling mass, so a graph with a dangling node must be refused."""
+    edges = _edges_df(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])  # 3 is dangling
+    with pytest.raises(ValueError, match="dangling"):
+        pagerank(spark, edges, check_interval=5)
 
 
 def test_connected_components_exact(spark, graphs):
@@ -268,24 +290,6 @@ def pagerank_resume_helper(spark, edges, nodes, state, start_iter):
         initial_ranks=state, start_iteration=start_iter,
     )
     return result.state
-
-
-def test_pagerank_csr_equals_join_path(spark, tmp_path):
-    """Per-partition CSR gather must be numerically identical (1e-12) to
-    the join gather (SURVEY.md §7 stage 3 property test)."""
-    g = nx.gnp_random_graph(150, 0.04, seed=SEED, directed=True)
-    edges = _edges_df(spark, g.edges())
-    nodes = spark.createDataFrame([(int(n),) for n in g.nodes()], "id long")
-    join_res = pagerank(spark, edges, nodes=nodes, tol=1e-9, max_iterations=100)
-    csr_res = pagerank(
-        spark, edges, nodes=nodes, tol=1e-9, max_iterations=100,
-        use_csr=True, csr_workdir=str(tmp_path / "csr"), csr_buckets=4,
-    )
-    a = {r.id: r.rank for r in join_res.state.collect()}
-    b = {r.id: r.rank for r in csr_res.state.collect()}
-    assert set(a) == set(b)
-    for node_id, rank in a.items():
-        assert math.isclose(b[node_id], rank, abs_tol=1e-12), node_id
 
 
 class TestIncrementalComponents:

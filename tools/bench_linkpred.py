@@ -13,7 +13,7 @@ graph and reports, per cap:
 
 It also projects — arithmetically, from the degree distribution — the
 two-path volume of a crawl-shaped variant where one node sources 10% of
-all edges (run_scaling's ``hub_src_pct=10``): the uncapped join there is
+all edges: the uncapped join there is
 ~10^12 rows, which is WHY the cap ships enabled by default rather than
 as an opt-in.
 

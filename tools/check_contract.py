@@ -8,6 +8,9 @@ sorted, values stringified with float normalization).
 Usage: python tools/check_contract.py [sf_dir] [query_name ...]
        python tools/check_contract.py [sf_dir] --shard I/N
 
+Query names and ``--shard`` are exclusive: a named query outside the
+shard would otherwise be skipped silently, so the run refuses both.
+
 Sharded mode (VERDICT r5 #8 — keep the inner loop usable as the query
 count grows): ``--shard I/N`` runs the deterministic I-th of N slices
 of the query list (round-robin by sorted position, so every shard gets
@@ -66,7 +69,8 @@ def value_hash(rows: list[dict]) -> str:
 def main() -> int:
     args = sys.argv[1:]
     shard_i, shard_n = 0, 1
-    if "--shard" in args:
+    sharded = "--shard" in args
+    if sharded:
         at = args.index("--shard")
         shard_i, shard_n = (int(x) for x in args[at + 1].split("/"))
         if not (0 <= shard_i < shard_n):
@@ -74,6 +78,8 @@ def main() -> int:
         del args[at : at + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    if sharded and only:
+        raise SystemExit("--shard cannot be combined with query names")
     spark = get_spark(app_name=f"contract-check-{shard_i}of{shard_n}")
     con = duckdb.connect()
     for t in TABLES:

@@ -41,20 +41,13 @@ ITERS = 10
 EXTRACT_PAGES = 150_000
 
 
-def _make_edges(spark, n_edges: int, n_nodes: int, hub_src_pct: int = 0):
+def _make_edges(spark, n_edges: int, n_nodes: int):
     """Deterministic power-law edge table; the ring guarantees out-degree
-    ≥ 1 (dangling-free → check_interval>1 is legal). ``hub_src_pct``:
-    re-source that percentage of the RANDOM edges to hub src 0 (the ring
-    is untouched, so the dangling-free guarantee holds) — the out-degree
-    skew generator shared by the bench's pagerank_srcskew rows and the
-    40%-hub crossover run."""
+    ≥ 1 (dangling-free → check_interval>1 is legal)."""
     from pyspark.sql import functions as F
 
     u = F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1_000_000)) / 1_000_000.0
     src = F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n_nodes))
-    if hub_src_pct > 0:
-        hub_roll = F.pmod(F.xxhash64("id", F.lit(11)), F.lit(100)) < F.lit(hub_src_pct)
-        src = F.when(hub_roll, F.lit(0).cast("long")).otherwise(src)
     rnd = (
         spark.range(n_edges)
         .select(
@@ -87,9 +80,9 @@ def cmd_run(args) -> None:
         n_edges, n_nodes = BASE_EDGES * scale, BASE_NODES * scale
         edges = _make_edges(spark, n_edges, n_nodes).repartition(cpus, "src").cache()
         ne = edges.count()
-        pagerank(spark, edges, tol=0.0, max_iterations=2, auto_tune=False, check_interval=5)
+        pagerank(spark, edges, tol=0.0, max_iterations=2, check_interval=5)
         start = time.time()
-        pagerank(spark, edges, tol=0.0, max_iterations=ITERS, auto_tune=False, check_interval=5)
+        pagerank(spark, edges, tol=0.0, max_iterations=ITERS, check_interval=5)
         sec = time.time() - start
         result.update(
             n_edges=ne,
@@ -317,8 +310,8 @@ def cmd_report(_args) -> None:
         "- Why the design scales on a real cluster: per iteration the only",
         "  cross-executor traffic is the rank vector (rows ∝ nodes), not",
         "  the edge table (cached partition-local, rows ∝ edges ≈ 10-40x",
-        "  nodes); gather uses map-side partial aggregation; hub skew is",
-        "  salted; the CSR path cuts JVM↔Python traffic to ranks only.",
+        "  nodes); gather uses map-side partial aggregation, which also",
+        "  absorbs hub skew.",
         "- Convergence checks every 5 iterations (check_interval=5) — the",
         "  production setting for throughput runs; correctness-mode",
         "  (per-iteration L1, networkx-equivalent) is what tests verify.",
